@@ -12,8 +12,9 @@ the checkpointed Dataset's ``LogicalRDD`` node; this module reaches it
 via ``queryExecution().analyzed().rdd()`` and unpersists THAT.
 
 Ownership model: every checkpoint created through :func:`checkpoint`
-is registered here.  Call sites that know their checkpoint's lifetime
-(e.g. the CV engine's fold table, dead once the metric pass ran) call
+is registered here, and only registered checkpoints are ever freed.
+Call sites that know their checkpoint's lifetime (e.g. the CV
+engine's fold table, dead once the metric pass ran) call
 :func:`release` directly; checkpoints that escape to callers (OOF
 tables, dedup pair tables) stay registered until the session owner —
 the bench harness between passes, a pipeline at stage end — calls
@@ -57,24 +58,24 @@ def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
 
 
 def release(df: DataFrame) -> None:
-    """Free the executor storage pinned by a checkpointed frame once
-    the caller is done with it.  Safe (no-op) on non-checkpointed
-    frames.  After release the frame CANNOT be recomputed — its
-    lineage was truncated at the checkpoint — so only call this when
-    every consumer has materialized (or no longer needs) the rows."""
+    """Free the executor storage pinned by a checkpoint made through
+    :func:`checkpoint` once the caller is done with it.  Only
+    registered handles are released: on any other frame (plain, or a
+    ``localCheckpoint``/RDD-backed frame this module did not create)
+    this is a no-op, so storage owned elsewhere is never unpersisted.
+    After release the frame CANNOT be recomputed — its lineage was
+    truncated at the checkpoint — so only call this when every
+    consumer has materialized (or no longer needs) the rows."""
     handle = getattr(df, "_ckpt_handle", None)
     if handle is None:
-        try:
-            handle = _ckpt_rdd(df)
-        except Exception:
-            return
-    try:
-        rid = handle.id()
-        handle.unpersist(False)
-    except Exception:
         return
     with _LOCK:
-        _LIVE.pop(rid, None)
+        if _LIVE.pop(handle.id(), None) is None:
+            return  # already released (here or by release_all)
+    try:
+        handle.unpersist(False)
+    except Exception:
+        pass
 
 
 def release_all() -> None:

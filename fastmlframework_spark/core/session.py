@@ -1,8 +1,9 @@
 """SparkSession factory.
 
-Single place where execution-relevant configuration lives.  Defaults
-are tuned for the local[32] test harness but every knob is the one
-you would also set on a 1000-executor cluster:
+Single place where execution-relevant configuration lives: every
+session (tests, benchmarks, tools, examples) is built here.  The core
+count follows ``SPARK_GRAFT_CPUS`` (else every local core), and every
+knob is the one you would also set on a 1000-executor cluster:
 
 * AQE on — runtime coalescing of shuffle partitions, skew-join
   splitting, and dynamic broadcast conversion replace hand-tuned
@@ -11,6 +12,10 @@ you would also set on a 1000-executor cluster:
   coalescing makes the initial number mostly irrelevant.
 * Arrow enabled — every Pandas-UDF path (similarity search, multimodal
   decode) transfers columnar batches, not pickled rows.
+* A generated-code cache that holds the working set — CV folds,
+  bagging seeds, HPO trials and stacking passes re-plan the same
+  shapes, so their compiled classes must still be cached next pass.
+* No per-call origin capture on PySpark ``Column`` calls.
 """
 
 from __future__ import annotations
@@ -48,6 +53,18 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        # Static conf, default 100.  A solution-chain pass uses ~180
+        # distinct generated classes and a corpus-batch pass ~220, so
+        # a 100-entry LRU evicts each class before its next use: every
+        # warm pass recompiled ~300 (chain) and ~230 (corpus) classes
+        # through Janino, then the JIT.  At 1000 a warm pass compiles
+        # 0-14 (4 vCPU, perfbench seed 5).
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # Default on: every Column call (~900 per chain pass) then
+        # spends about four py4j round trips recording a call site,
+        # and at the default depth of 1 that site is a line in this
+        # package, not in user code.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if extra_conf:
         for k, v in extra_conf.items():

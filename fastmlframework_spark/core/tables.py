@@ -89,17 +89,19 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     reassociation drift.  Every such consumer is re-verified against
     its oracle at multiple core counts (OPTIMIZATION_r13.md batch 4).
 
-    Caveats (ADVICE r13): ``min_partitions`` is compared against
-    ``None`` (an explicit 0 disables the fan-out rather than falling
-    back to defaultParallelism), and the ``getNumPartitions`` probe
-    reports the PRE-AQE partition count for shuffle-fed lineages — it
-    is only accurate for scans and (eagerly) checkpointed frames,
-    which is where every current caller applies it."""
-    par = (
-        df.sparkSession.sparkContext.defaultParallelism
-        if min_partitions is None
-        else min_partitions
-    )
+    ``min_partitions`` defaults to ``defaultParallelism``; a value
+    ``<= 0`` raises ``ValueError`` (it would otherwise silently turn
+    the fan-out off).  Caveat (ADVICE r13): the ``getNumPartitions``
+    probe reports the PRE-AQE partition count for shuffle-fed
+    lineages — it is only accurate for scans and (eagerly)
+    checkpointed frames, which is where every current caller applies
+    it."""
+    if min_partitions is None:
+        par = df.sparkSession.sparkContext.defaultParallelism
+    elif min_partitions <= 0:
+        raise ValueError(f"min_partitions must be > 0, got {min_partitions}")
+    else:
+        par = min_partitions
     if df.rdd.getNumPartitions() >= par:
         return df
     return df.repartition(par)

@@ -51,6 +51,26 @@ def test_release_is_safe_on_plain_frames(spark):
     assert df.count() == 10
 
 
+def test_release_is_a_no_op_on_untracked_frames(spark):
+    """ADVICE r14: release() must free only checkpoints this module
+    registered.  A frame over a user-persisted RDD and the user's own
+    ``localCheckpoint`` both keep their storage."""
+    sc = spark.sparkContext
+    rdd = sc.parallelize([(i, float(i)) for i in range(100)], 2).persist()
+    rdd.count()
+    over_rdd = spark.createDataFrame(rdd, "k long, v double")
+    own = spark.range(1_000).localCheckpoint(eager=True)
+    held = _storage_ids(spark)
+    assert rdd.id() in held
+    live = checkpoints.live_count()
+    checkpoints.release(over_rdd)
+    checkpoints.release(own)
+    assert held <= _storage_ids(spark)
+    assert checkpoints.live_count() == live
+    assert own.count() == 1_000
+    rdd.unpersist()
+
+
 def test_dedup_release_checkpoint_actually_frees(spark):
     from fastmlframework_spark.extensions.dedup import (
         _materialize_release,

@@ -8,6 +8,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
+from fastmlframework_spark.core.tables import fan_out
 from fastmlframework_spark.extensions import dedup as xdedup
 from fastmlframework_spark.ml.folds import with_fold_column
 from fastmlframework_spark.operators.asof import asof_join, range_join
@@ -134,3 +135,14 @@ def test_sq8_encode_constant_dimension(spark):
     for r in vals:
         for w in r["__packed"]:
             assert 0 <= w < (1 << 56)
+
+
+def test_fan_out_rejects_non_positive_min_partitions(spark):
+    """ADVICE r14: min_partitions=0 used to turn the fan-out off
+    silently; a non-positive target is a caller error."""
+    df = spark.range(0, 40, 1, 1)
+    for bad in (0, -2):
+        with pytest.raises(ValueError, match="min_partitions"):
+            fan_out(df, bad)
+    assert fan_out(df, 3).rdd.getNumPartitions() == 3
+    assert fan_out(df, 1) is df

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
@@ -113,6 +114,44 @@ def test_auc_with_ties_matches_sklearn_convention(spark):
     assert math.isclose(
         metrics.score(df, "roc_auc_score", "label", "score"), 3.5 / 4
     )
+
+
+def _auc_case(kind: str, n: int = 50):
+    rng = np.random.default_rng(7)
+    y = rng.integers(0, 2, n)
+    y[:4] = [0, 0, 1, 1]  # both classes in the whole and in each group
+    if kind == "ties":
+        s = np.round(rng.random(n), 1)
+    elif kind == "negative_shift":
+        s = rng.random(n) * 100.0 - 50.0
+    else:  # constant
+        s = np.full(n, 0.3)
+    return y, s
+
+
+@pytest.mark.parametrize("kind", ["ties", "negative_shift", "constant"])
+def test_rank_auc_parity_on_fixed_examples(spark, kind):
+    """ADVICE r14: the default tier's parity check for the bucketed
+    rank-AUC kernel against the sklearn-definition reference (the
+    hypothesis sweep in test_metrics_properties.py is the slow tier)."""
+    from tests.test_metrics_properties import _ref_auc
+
+    y, s = _auc_case(kind)
+    g = np.arange(len(y)) % 2
+    df = spark.createDataFrame(
+        [(int(a), float(b), int(c)) for a, b, c in zip(y, s, g)],
+        "label int, score double, g int",
+    )
+    got = metrics.roc_auc_df(df, "label", "score").first()["auc"]
+    assert got == pytest.approx(_ref_auc(y, s), abs=1e-12)
+    by_g = {
+        r["g"]: r["auc"]
+        for r in metrics.roc_auc_by_df(df, "label", "score", "g").collect()
+    }
+    assert sorted(by_g) == [0, 1]
+    for grp, auc in by_g.items():
+        m = g == grp
+        assert auc == pytest.approx(_ref_auc(y[m], s[m]), abs=1e-12)
 
 
 def test_unknown_metric_raises(spark):

@@ -1406,6 +1406,7 @@ def test_state_partition_override_is_session_isolated(
     iso = spark.newSession()
     seen: list[str] = []
     err: list[BaseException] = []
+    observed = threading.Event()
 
     def drain():
         try:
@@ -1419,16 +1420,25 @@ def test_state_partition_override_is_session_isolated(
             )
         except BaseException as exc:  # surfaced below
             err.append(exc)
+        finally:
+            # the thread cannot finish before the main thread's first
+            # observation, however fast the drain runs
+            observed.wait(timeout=300)
 
     t = threading.Thread(target=drain)
     t.start()
     # Concurrent batch work on the PARENT session while the drain
     # holds its override: poll the conf and run a real aggregate.
-    while t.is_alive():
-        seen.append(spark.conf.get(key))
-        spark.range(100).groupBy((F.col("id") % 5).alias("g")).count().collect()
-        time.sleep(0.01)
-    t.join()
+    try:
+        while t.is_alive():
+            seen.append(spark.conf.get(key))
+            observed.set()
+            spark.range(100).groupBy((F.col("id") % 5).alias("g")).count().collect()
+            time.sleep(0.01)
+    finally:
+        observed.set()
+    t.join(timeout=300)
+    assert not t.is_alive(), "drain thread did not finish"
     assert not err, err
     assert seen, "drain finished before any concurrent observation"
     assert set(seen) == {parent_before}
